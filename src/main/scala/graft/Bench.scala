@@ -129,180 +129,17 @@ object Bench {
       def spread: Double = if (min <= 0) 1.0 else recorded / min
       def noisy: Boolean = err.isEmpty && spread > 2.0 && recorded >= 0.5
     }
-    // SPARK_GRAFT_SAMPLER=1: in-process stack sampler (attach/jstack are
-    // unavailable in the sandbox) — every 15 ms, tally the top frame of
-    // every RUNNABLE thread; per-query histograms print to stderr. Pure
-    // diagnostics, off by default, never touches stdout.
-    val samplerOn = sys.env.contains("SPARK_GRAFT_SAMPLER")
-    val sampleCounts = new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.LongAdder]()
-    if (samplerOn) {
-      val t = new Thread(() => {
-        while (true) {
-          val stacks = Thread.getAllStackTraces
-          stacks.forEach { (th, frames) =>
-            if (th.getState == Thread.State.RUNNABLE && frames.nonEmpty &&
-                th.getName != "graft-sampler") {
-              val top = frames.iterator.find { f =>
-                val c = f.getClassName
-                !c.startsWith("java.") && !c.startsWith("jdk.") &&
-                  !c.startsWith("sun.") && !c.startsWith("scala.collection")
-              }.getOrElse(frames(0))
-              // a Shell frame alone says "exec'd a process", not WHY —
-              // append the first spark/graft caller below it
-              val key = if (top.getClassName.contains("hadoop.util.Shell")) {
-                val caller = frames.iterator.find { f =>
-                  val c = f.getClassName
-                  c.startsWith("org.apache.spark") || c.startsWith("graft")
-                }.map(f => s"<-${f.getClassName.split('.').last}.${f.getMethodName}")
-                  .getOrElse {
-                    frames.iterator.find { f =>
-                      val c = f.getClassName
-                      c.startsWith("org.apache.hadoop") &&
-                        !c.contains("util.Shell") && !c.contains("util.StringUtils")
-                    }.map(f => s"<-${f.getClassName.split('.').last}.${f.getMethodName}")
-                      .getOrElse("")
-                  }
-                s"${top.getClassName}.${top.getMethodName}$caller"
-              } else s"${top.getClassName}.${top.getMethodName}"
-              sampleCounts.computeIfAbsent(key,
-                _ => new java.util.concurrent.atomic.LongAdder).increment()
-            }
-          }
-          Thread.sleep(15)
-        }
-      }, "graft-sampler")
-      t.setDaemon(true)
-      t.start()
-    }
-    // SPARK_GRAFT_MEMLOG=1: per-rep block-manager/heap snapshot to stderr —
-    // diagnosing late-session interference (cache-heavy queries running 3-8x
-    // slower in a 363-query session than isolated, with the CPU-time blow-up
-    // that marks evicted-cache recomputation). Pure diagnostics, off by
-    // default, never touches stdout.
-    val memlogOn = sys.env.contains("SPARK_GRAFT_MEMLOG")
-    def memlog(tag: String): Unit = if (memlogOn) {
-      val sc = spark.sparkContext
-      val (maxMem, remMem) = sc.getExecutorMemoryStatus.values.foldLeft((0L, 0L)) {
-        case ((a, b), (m, r)) => (a + m, b + r)
-      }
-      val rdds = sc.getRDDStorageInfo
-      val rt = Runtime.getRuntime
-      val providers = try {
-        val cls = Class.forName(
-          "org.apache.spark.sql.execution.streaming.state.StateStore$")
-        val mod = cls.getField("MODULE$").get(null)
-        val f = cls.getDeclaredFields.find(_.getName.contains("loadedProviders"))
-        f.map { fl => fl.setAccessible(true)
-          fl.get(mod) match {
-            case m: scala.collection.mutable.Map[_, _] => m.size.toString
-            case m: java.util.Map[_, _] => m.size.toString
-            case _ => "?"
-          }
-        }.getOrElse("?")
-      } catch { case _: Throwable => "?" }
-      val pools = ManagementFactory.getMemoryPoolMXBeans.asScala
-        .filter(p => p.getName.contains("CodeHeap") || p.getName.contains("Metaspace"))
-        .map(p => s"${p.getName.replace("CodeHeap '", "").replace("'", "").replace(" ", "")}=" +
-          s"${p.getUsage.getUsed / (1 << 20)}/${p.getUsage.getMax / (1 << 20)}MB")
-        .mkString(" ")
-      System.err.println(f"[memlog] $tag $pools heapUsed=${(rt.totalMemory - rt.freeMemory) / (1 << 20)}%dMB " +
-        f"heapComm=${rt.totalMemory / (1 << 20)}%dMB storageUsed=${(maxMem - remMem) / (1 << 20)}%dMB " +
-        f"rddBlocks=${rdds.map(_.numCachedPartitions).sum}%d rddMem=${rdds.map(_.memSize).sum / (1 << 20)}%dMB " +
-        f"rddDisk=${rdds.map(_.diskSize).sum / (1 << 20)}%dMB nRdds=${rdds.length}%d stateProviders=$providers")
-    }
-    def drainSamples(name: String): Unit = if (samplerOn) {
-      import scala.jdk.CollectionConverters._
-      val top = sampleCounts.asScala.toSeq.map { case (k, v) => (k, v.sum) }
-        .sortBy(-_._2).take(14)
-      sampleCounts.clear()
-      System.err.println(s"[sampler] $name " +
-        top.map { case (k, v) => s"$k=$v" }.mkString(" "))
-    }
-    // SPARK_GRAFT_JOBLOG=1: per-rep job/stage accounting — how much of a
-    // rep's wall time sat BETWEEN jobs (driver/steering gaps) vs inside
-    // stages (task compute), and the largest single gap. Separates the
-    // "evicted-cache recompute" blow-up signature (task time explodes)
-    // from the "driver stall" one (gap explodes). Diagnostics only.
-    val joblogOn = sys.env.contains("SPARK_GRAFT_JOBLOG")
-    case class JobSpan(id: Int, t0: Long, var t1: Long)
-    val jobSpans = new java.util.concurrent.ConcurrentHashMap[Int, JobSpan]()
-    val taskMs = new java.util.concurrent.atomic.LongAdder
-    if (joblogOn) spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobSpans.put(js.jobId, JobSpan(js.jobId, System.nanoTime(), -1L))
-        override def onJobEnd(je: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-          val s = jobSpans.get(je.jobId); if (s != null) s.t1 = System.nanoTime()
-        }
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-          taskMs.add(sc.stageInfo.taskMetrics.executorRunTime)
-      })
-    def drainJoblog(tag: String, repWallS: Double): Unit = if (joblogOn) {
-      import scala.jdk.CollectionConverters._
-      val spans = jobSpans.values.asScala.toSeq.filter(_.t1 > 0).sortBy(_.t0)
-      jobSpans.clear()
-      val jobsS = spans.map(s => (s.t1 - s.t0) / 1e9).sum
-      var gapMax = 0.0
-      spans.sliding(2).foreach {
-        case Seq(a, b) => gapMax = math.max(gapMax, (b.t0 - a.t1) / 1e9)
-        case _ =>
-      }
-      val t = taskMs.sumThenReset() / 1e3
-      System.err.println(f"[joblog] $tag wall=$repWallS%.2f nJobs=${spans.size}%d " +
-        f"jobsWall=$jobsS%.2f betweenJobs=${math.max(0, repWallS - jobsS)}%.2f " +
-        f"maxGap=$gapMax%.2f taskSec=$t%.1f")
-    }
-    // SPARK_GRAFT_WATCHDOG=1: when a warm rep runs 3x past the query's
-    // first rep, dump every thread's state + stack ONCE to stderr — the
-    // roving late-session blow-ups (one rep 3-20x slower with the same
-    // plan) need the stall caught in the act, and the RUNNABLE-only
-    // sampler cannot see waits. Diagnostics only.
-    val watchdogOn = sys.env.contains("SPARK_GRAFT_WATCHDOG")
-    @volatile var wdDeadline = Long.MaxValue
-    @volatile var wdTag = ""
-    @volatile var wdFired = false
-    if (watchdogOn) {
-      val t = new Thread(() => {
-        while (true) {
-          if (!wdFired && System.nanoTime() > wdDeadline) {
-            wdFired = true
-            val sb = new StringBuilder(s"[watchdog] STALL $wdTag\n")
-            Thread.getAllStackTraces.forEach { (th, frames) =>
-              if (frames.nonEmpty) {
-                sb.append(s"[watchdog]  ${th.getName} ${th.getState}\n")
-                frames.take(14).foreach(f => sb.append(s"[watchdog]    $f\n"))
-              }
-            }
-            System.err.print(sb.result())
-          }
-          Thread.sleep(500)
-        }
-      }, "graft-watchdog")
-      t.setDaemon(true)
-      t.start()
-    }
     val health0 = (loadAvg, gcMs, cpuMs)
     val wall0 = System.nanoTime()
     val results = selected.map { case (name, fn) =>
       var err = Option.empty[String]
       val nReps = if (isStream(name)) math.max(reps, 4) else reps
-      var rep1Wall = 0.0
       val repRows = (1 to nReps).map { r =>
         resetSession(gc = r == 1)
         val (g0, c0, t0) = (gcMs, cpuMs, System.nanoTime())
-        if (watchdogOn && r > 1 && rep1Wall > 0) {
-          wdTag = s"$name rep$r (rep1=${fmt(rep1Wall)}s)"
-          wdFired = false
-          wdDeadline = t0 + (math.max(3 * rep1Wall, 2.0) * 1e9).toLong
-        } else wdDeadline = Long.MaxValue
         val e = try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); None }
           catch { case e: Throwable => Some(e.toString.takeWhile(_ != '\n').take(160)) }
         if (e.isDefined) err = e
-        wdDeadline = Long.MaxValue
-        if (r == 1) rep1Wall = (System.nanoTime() - t0) / 1e9
-        memlog(s"$name rep$r")
-        drainJoblog(s"$name rep$r", (System.nanoTime() - t0) / 1e9)
         Rep((System.nanoTime() - t0) / 1e9, gcMs - g0,
           for (c1 <- cpuMs; c <- c0) yield c1 - c)
       }
@@ -312,7 +149,6 @@ object Bench {
       // thread dumps / host samples without waiting for the artifact
       System.err.println(s"[bench] ${java.time.Instant.now()} $name " +
         s"recorded=${fmt(res.recorded)} reps=${repRows.map(r => fmt(r.wall)).mkString(",")}")
-      drainSamples(name)
       res
     }
     val health1 = (loadAvg, gcMs, cpuMs)

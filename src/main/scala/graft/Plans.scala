@@ -10,6 +10,12 @@ import java.nio.file.{Files, Paths}
   *
   * Usage: `sbt "runMain graft.Plans [sfDir] [outFile]"` (defaults
   * /root/testdata/sf0.001, PLANS.md).
+  *
+  * With query names, `sbt "runMain graft.Plans <sfDir> <outDir> <suffix>
+  * q1,q2,..."` instead writes each named query's FormattedMode explain to
+  * `<outDir>/<query>_<suffix>.txt` — the per-round plan evidence
+  * (`plans/r<N>/<query>_{before,after}.txt`): run it once at the
+  * pre-change commit (`before`) and once on the current tree (`after`).
   */
 object Plans {
 
@@ -438,7 +444,33 @@ object Plans {
   // localCheckpoint'd, so the explain shows checkpoint scans; the
   // one-scan/iteration evidence lives in SCALECHECK.md instead.
 
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit =
+    if (args.length == 4)
+      explainQueries(args(0), args(1), args(2), args(3).split(",").map(_.trim).filter(_.nonEmpty))
+    else writeDossier(args)
+
+  private def explainQueries(sfDir: String, outDir: String, suffix: String,
+                             names: Seq[String]): Unit = {
+    Files.createDirectories(Paths.get(outDir))
+    val spark = GraftSession.get("graft-plans")
+    spark.range(1).count()
+    names.foreach { name =>
+      val out = Paths.get(outDir, s"${name}_$suffix.txt")
+      try {
+        val txt = SparkEntry.queries(name)(spark, sfDir).queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode)
+        Files.writeString(out, txt)
+        System.err.println(s"[plans] wrote $out (${txt.length} chars)")
+      } catch {
+        case e: Throwable =>
+          System.err.println(s"[plans] $name FAILED: $e")
+          sys.exit(1)
+      }
+    }
+    spark.stop()
+  }
+
+  private def writeDossier(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = args.lift(1).getOrElse("PLANS.md")
     val spark = GraftSession.get("graft-plans")

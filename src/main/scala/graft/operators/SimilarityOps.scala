@@ -92,15 +92,10 @@ object SimilarityOps {
 
   /** Quantize float components to round(x·1e7) longs — the native
     * codegen'd [[graft.expressions.Quantize]] kernel since round 14 (one
-    * compiled loop per row; the HOF form below re-interprets the
-    * round/cast tree per component). */
+    * compiled loop per row; the `transform(round(...))` HOF form
+    * re-interprets the round/cast tree per component). */
   def quantize(emb: Column): Column =
     call_function("graft_quantize", emb)
-
-  /** Reference implementation of [[quantize]] in pure built-ins; kept for
-    * equivalence testing and for sessions without GraftExtensions. */
-  def quantizeHof(emb: Column): Column =
-    transform(emb, x => round(x.cast("double") * 1e7).cast("long"))
 
   /** Exact integer dot product of two quantized vectors, via the native
     * codegen'd [[graft.expressions.DotQ]] expression (registered by
@@ -426,37 +421,17 @@ object SimilarityOps {
       struct(lit(c.cid).as("cid"), typedLit(c.cv.toSeq).as("cv"),
         lit(normSqL(c.cv)).as("nc"))): _*)
 
-  /** One Spark job per Lloyd round: assignment = the [[nearestCid]] fold
-    * over the literal centroid array (pure map, zero shuffle), update =
-    * the SAME partial-aggregated (cid → count(1), per-dimension
-    * round(sum/count) re-quantized mean) expressions as the former lazy
-    * composition, collected as ≤k control rows. An empty cluster keeps
+  /** The Lloyd round loop, per GROUP in one Spark job per round:
+    * assignment = the [[nearestCid]] fold over the group's literal
+    * centroid array, looked up in a grp → array literal MAP (pure map,
+    * zero shuffle — so m sub-codebooks train in ONE pass whatever m is);
+    * update = the partial-aggregated ((grp, cid) → count(1),
+    * per-dimension round(sum/count) re-quantized mean) exchange of
+    * dimension SUMS, collected as ≤ groups·k control rows — no vector
+    * array crosses an exchange during training. An empty cluster keeps
     * its previous centroid with n = 0 — the left-join/coalesce rule,
-    * applied driver-side. */
-  private def lloydRounds(qvNa: DataFrame, init: Seq[Cent], iters: Int,
-                          dim: Int): Seq[Cent] = {
-    var cents = init
-    (1 to iters).foreach { _ =>
-      val upd = qvNa
-        .select(nearestCid(col("qv"), col("na"), centsLit(cents)).as("cid"),
-          col("qv"))
-        .groupBy("cid")
-        .agg(count(lit(1)).as("n"), array((1 to dim).map(i =>
-          round(sum(element_at(col("qv"), i)) / count(lit(1))).cast("long")): _*).as("ucv"))
-        .collect()
-      val byCid = upd.map(r =>
-        r.getInt(0) -> ((r.getLong(1), r.getSeq[Long](2).toArray))).toMap
-      cents = cents.map(c => byCid.get(c.cid)
-        .map { case (n, u) => Cent(c.cid, n, u) }
-        .getOrElse(Cent(c.cid, 0L, c.cv))) // empty keeps previous
-    }
-    cents
-  }
-
-  /** [[lloydRounds]] per GROUP in one job per round, assignment keyed by
-    * a grp → centroid-array literal MAP (so m sub-codebooks still train
-    * in ONE pass whatever m is — the r14 grouped-chain shape, minus its
-    * per-round broadcasts). */
+    * applied driver-side. Each group's result is bit-identical to
+    * training that group alone; an ungrouped trainer is group 0. */
   private def lloydRoundsGrouped(qvNa: DataFrame, init: Map[Int, Seq[Cent]],
                                  iters: Int, dim: Int): Map[Int, Seq[Cent]] = {
     var books = init
@@ -484,7 +459,9 @@ object SimilarityOps {
   /** Driver-round Lloyd over an already-quantized (vec_id, qv) frame,
     * returning centroids as control rows. Init = the k smallest vec_ids'
     * vectors in vec_id order (TakeOrdered — k rows to the driver), cid =
-    * position, exactly the former row_number rule. */
+    * position, exactly the former row_number rule. Kept apart from
+    * [[lloydDriverGroupedQ]]'s per-group seed slice, which costs one more
+    * collect. */
   private def lloydDriverQ(qvIn: DataFrame, k: Int, iters: Int,
                            dim: Int): Seq[Cent] = {
     require(k > 0 && iters > 0 && dim > 0,
@@ -495,7 +472,7 @@ object SimilarityOps {
       .orderBy("vec_id").limit(k)
       .collect().sortBy(_.getLong(0)).zipWithIndex
       .map { case (r, i) => Cent(i, 0L, r.getSeq[Long](1).toArray) }.toSeq
-    lloydRounds(qvNa, init, iters, dim)
+    lloydRoundsGrouped(qvNa.withColumn("grp", lit(0)), Map(0 -> init), iters, dim)(0)
   }
 
   /** Grouped [[lloydDriverQ]]: per-group seeds = the group's k smallest
@@ -524,16 +501,9 @@ object SimilarityOps {
     lloydRoundsGrouped(qvNa, init, iters, dim)
   }
 
-  /** Materialized (cid, n, cv) frame from control rows — a LocalRelation
-    * with the trainers' original output schema. */
-  private def centsFrame(spark: org.apache.spark.sql.SparkSession,
-                         cents: Seq[Cent]): DataFrame =
-    spark.range(1).select(explode(array(cents.sortBy(_.cid).map(c =>
-      struct(lit(c.cid).as("cid"), lit(c.n).as("n"),
-        typedLit(c.cv.toSeq).as("cv"))): _*)).as("c"))
-      .select(col("c.cid").as("cid"), col("c.n").as("n"), col("c.cv").as("cv"))
-
-  /** Grouped [[centsFrame]]: (grp, cid, n, cv). */
+  /** Materialized (grp, cid, n, cv) frame from control rows — a
+    * LocalRelation with the trainers' output schema (an ungrouped trainer
+    * drops `grp`). */
   private def groupedCentsFrame(spark: org.apache.spark.sql.SparkSession,
                                 books: Map[Int, Seq[Cent]]): DataFrame =
     spark.range(1).select(explode(array(books.toSeq.sortBy(_._1).flatMap {
@@ -543,15 +513,9 @@ object SimilarityOps {
       .select(col("c.grp").as("grp"), col("c.cid").as("cid"),
         col("c.n").as("n"), col("c.cv").as("cv"))
 
-  /** [[assignToCentroidsQ]] against LITERAL centroids: the same
+  /** [[assignToCentroidsQ]] per group against LITERAL codebooks: input
+    * (grp, vec_id, qv), output (grp, cid, vec_id, qv). The same
     * [[nearestCid]] fold, zero joins, stays lazy. */
-  private def assignLit(qvIn: DataFrame, cents: Seq[Cent]): DataFrame =
-    qvIn.select(col("vec_id"), col("qv"))
-      .withColumn("na", dotQ(col("qv"), col("qv")))
-      .select(nearestCid(col("qv"), col("na"), centsLit(cents)).as("cid"),
-        col("vec_id"), col("qv"))
-
-  /** [[assignToCentroidsGroupedQ]] against LITERAL codebooks. */
   private def assignGroupedLit(grouped: DataFrame,
                                books: Map[Int, Seq[Cent]]): DataFrame = {
     val csMap = map(books.toSeq.sortBy(_._1).flatMap { case (g, cs) =>
@@ -569,47 +533,8 @@ object SimilarityOps {
     * quantized vectors; re-quantizing them would be wrong). Returns the
     * trained centroids as a materialized k-row LocalRelation. */
   def kmeansCentroidsQ(qvIn: DataFrame, k: Int, iters: Int, dim: Int): DataFrame =
-    centsFrame(qvIn.sparkSession, lloydDriverQ(qvIn, k, iters, dim))
-
-  /** [[kmeansCentroidsQ]] run independently per GROUP in one DataFrame
-    * chain — the PQ / IVF-PQ sub-codebook trainer. Input (grp, vec_id,
-    * qv); output (grp, cid, n, cv). The per-group math is exactly the
-    * single-group trainer's (init = the group's k smallest vec_ids in
-    * vec_id order; assignment = the strict-`<` fold over the cid-sorted
-    * per-group centroid array; update = re-quantized mean, empty cluster
-    * keeps its previous centroid), so each group's codebook is
-    * bit-identical to a separate [[kmeansCentroidsQ]] call on that
-    * group's rows. The m independent Lloyd chains train in ONE driver-
-    * round loop (guide §2.4 — share one pass whatever m is): every round
-    * is one assignment-fold scan + one (grp, cid) partial-aggregated
-    * exchange of dimension SUMS, read back as ≤ groups·k control rows.
-    * No vector array crosses an exchange during training (the q224
-    * query-time contract, extended to train time). Returns the trained
-    * codebooks as a materialized LocalRelation. */
-  def kmeansCentroidsGroupedQ(grouped: DataFrame, k: Int, iters: Int,
-                              dim: Int): DataFrame =
-    groupedCentsFrame(grouped.sparkSession,
-      lloydDriverGroupedQ(grouped, k, iters, dim))
-
-  /** [[assignToCentroidsQ]] per group in one pass: input (grp, vec_id,
-    * qv) and (grp, cid, cv); output (grp, cid, vec_id, qv). Same
-    * broadcast-array fold, keyed by grp instead of crossJoin'd. */
-  def assignToCentroidsGroupedQ(grouped: DataFrame, cents: DataFrame): DataFrame =
-    grouped.select(col("grp"), col("vec_id"), col("qv"))
-      .withColumn("na", dotQ(col("qv"), col("qv")))
-      .join(centsArrayGrouped(cents.select(col("grp"), col("cid"), col("cv"))),
-        Seq("grp"))
-      .select(col("grp"), nearestCid(col("qv"), col("na"), col("cs")).as("cid"),
-        col("vec_id"), col("qv"))
-
-  /** [[centsArray]] per group: one row per grp holding that group's
-    * cid-sorted (cid, cv, nc) struct array, broadcast (m·k·(dim+1) longs —
-    * tiny at any corpus size). */
-  private def centsArrayGrouped(cents: DataFrame): DataFrame =
-    broadcast(cents
-      .select(col("grp"), struct(col("cid"), col("cv"),
-        dotQ(col("cv"), col("cv")).as("nc")).as("c"))
-      .groupBy("grp").agg(sort_array(collect_list(col("c"))).as("cs")))
+    groupedCentsFrame(qvIn.sparkSession, Map(0 -> lloydDriverQ(qvIn, k, iters, dim)))
+      .drop("grp")
 
   /** Assign every vector to its exact-integer-L2 nearest centroid (the
     * k-means assignment rule: argmin |a|² − 2a·c + |c|², ties to the
@@ -846,7 +771,7 @@ object SimilarityOps {
     // literal centroid array (cids are 0..nlist-1 by the seed rule, so
     // the centroid vector is an element_at lookup — no join at all)
     val coarseCvs: Seq[Seq[Long]] = coarseC.sortBy(_.cid).map(_.cv.toSeq)
-    val resid = assignLit(qvAll, coarseC)
+    val resid = assignGroupedLit(qvAll.withColumn("grp", lit(0)), Map(0 -> coarseC))
       .select(col("cid"), col("vec_id"),
         zip_with(col("qv"),
           element_at(typedLit(coarseCvs), col("cid") + lit(1)),

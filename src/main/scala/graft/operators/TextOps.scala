@@ -352,17 +352,6 @@ object TextOps {
   def containmentPairsPrefix(shingleDf: DataFrame, idCol: String,
                              thrNum: Long = 9, thrDen: Long = 10,
                              minShingles: Int = 1): DataFrame = {
-    val (result, shared) =
-      containmentPairsPrefixInner(shingleDf, idCol, thrNum, thrDen, minShingles)
-    graft.Materialize.thenRelease(result, shared: _*)
-  }
-
-  /** [[containmentPairsPrefix]]'s lazy body: (result frame, shared caches
-    * to release after materialization). Split out so diagnostics can see
-    * the real plan (Materialize truncates it to a checkpoint scan). */
-  private[graft] def containmentPairsPrefixInner(
-      shingleDf: DataFrame, idCol: String, thrNum: Long, thrDen: Long,
-      minShingles: Int): (DataFrame, Seq[DataFrame]) = {
     require(thrNum > 0 && thrDen > 0 && thrNum <= thrDen,
       s"bad threshold $thrNum/$thrDen")
     val base = shingleDf.select(col(idCol).as("id"), col("sh"))
@@ -415,7 +404,7 @@ object TextOps {
         size(array_intersect(col("sh1"), col("sh2"))) / size(col("sh1")))
       .filter(col("containment") >= lit(thrNum.toDouble / thrDen.toDouble))
       .select(col("id1"), col("id2"), col("containment"))
-    (verified, Seq(postings, base))
+    graft.Materialize.thenRelease(verified, postings, base)
   }
 
   /** Ed-Join-style edit-distance similarity join (Xiao, Wang, Lin,

@@ -295,6 +295,32 @@ class TextOpsSpec extends SparkSpec {
     assert(pref.sameElements(exact))
     assert(exact.exists(p => p._1 == 20L && p._2 == 21L && p._3 == 1.0))
     assert(!exact.exists(p => p._1 == 21L && p._2 == 20L)) // big ⊄ small
+
+    // heavy-tailed postings: one fixed 12-word boilerplate span (10 shared
+    // trigrams) appended to ~30% of the docs (id % 10 < 3), the shape the
+    // rarity prefix exists for. Organic texts are 20 distinct words; 140
+    // copies 100 and 141 is 101's first 15 words, so the true pairs share
+    // organic shingles while boilerplate-only overlap stays ≈ 10/30 < 0.8.
+    val boiler = (0 until 12).map(i => s"bp_w$i").mkString(" ")
+    def organic(id: Long, n: Int): String = (0 until n).map(j => s"d${id}_w$j").mkString(" ")
+    val skewed = ((100L until 140L).map(id => id -> organic(id, 20)) ++
+      Seq(140L -> organic(100L, 20), 141L -> organic(101L, 15)))
+      .map { case (id, t) => (id, if (id % 10 < 3) s"$t $boiler" else t) }
+      .toDF("doc_id", "text")
+    val skSh = TextOps.shingleTable(skewed, "doc_id")
+    val skExact = TextOps.containmentPairs(skSh, "doc_id", threshold = 0.8)
+      .as[(Long, Long, Double)].collect().sorted
+    val skPref = TextOps.containmentPairsPrefix(skSh, "doc_id", thrNum = 4, thrDen = 5)
+      .as[(Long, Long, Double)].collect().sorted
+    assert(skPref.sameElements(skExact))
+    val shOf = skSh.as[(Long, Seq[String])].collect().toMap
+    def boilerOnly(s: String): Boolean = s.split(" ").forall(_.startsWith("bp_"))
+    // the tail is real: every boilerplate shingle sits in ≥ 30% of the docs
+    assert(shOf.values.count(_.exists(boilerOnly)) >= 0.3 * shOf.size)
+    assert(skExact.map(p => (p._1, p._2)).toSet ==
+      Set((100L, 140L), (140L, 100L), (141L, 101L)))
+    // no pair exists on the boilerplate alone
+    assert(skExact.forall(p => (shOf(p._1).toSet & shOf(p._2).toSet).exists(!boilerOnly(_))))
   }
 
   test("charEntropy: constant, two-symbol, and uniform strings hit closed forms") {
